@@ -371,9 +371,10 @@ class Engine:
 
     def cmd_tree(self, cmd: dict) -> dict:
         """Opening-tree expansion: top-N continuations followed D plies
-        from a position, one batched probe job per level (the whole
-        frontier probes together — a depth-4 tree is 4 jobs, not 40
-        requests)."""
+        from a position, one batched explorer query per level (the whole
+        frontier probes together in one pruned scan folded on the
+        driver, plus the headers lookup — a depth-4 tree is 4 queries,
+        not 40 requests)."""
         self._require_open()
         tree = query.explorer_tree(
             self.spark,

@@ -216,8 +216,10 @@ def plan_pgn_splits(
         sizes = stat_pgn_sizes(files)
     seen = set()
     rows = []
+    # strict: a `sizes` list shorter than `files` must not silently
+    # drop the trailing files from the import
     for (idx, (path, level)), size in zip(
-        enumerate(files, start=file_idx_base), sizes
+        enumerate(files, start=file_idx_base), sizes, strict=True
     ):
         ap = os.path.abspath(path)
         if ap in seen:

@@ -71,11 +71,18 @@ def _ship_package(spark: SparkSession) -> None:
 
 # Split-count probe cache for spread_small_scan: the probe forces an
 # analyzed-plan→RDD translation on the driver, so pay it once per
-# (session, input-file-set) instead of on every plan build. Valid
-# because the split count is a pure function of the file set and
-# session-fixed confs (maxPartitionBytes / openCostInBytes /
-# defaultParallelism); keyed on applicationId so new sessions re-probe.
+# (session, input-file-set, split confs) instead of on every plan build.
+# Valid because the split count is a pure function of the file set, the
+# split-sizing confs below and defaultParallelism (fixed per session);
+# keyed on applicationId so new sessions re-probe. Frames with no input
+# files (in-memory or range sources) are not cached: they would all
+# share one key.
 _SPREAD_PROBE: dict[tuple, int] = {}
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+)
 
 
 def spread_small_scan(
@@ -99,11 +106,19 @@ def spread_small_scan(
     further — never above the guard's threshold). Keep this helper on
     LEAF scans: probing a composite plan would execute its upstream."""
     par = spark.sparkContext.defaultParallelism
-    cache_key = (spark.sparkContext.applicationId, tuple(df.inputFiles()))
-    n = _SPREAD_PROBE.get(cache_key)
-    if n is None:
+    files = tuple(df.inputFiles())
+    if files:
+        cache_key = (
+            spark.sparkContext.applicationId,
+            files,
+            *(spark.conf.get(c, None) for c in _SPLIT_CONFS),
+        )
+        n = _SPREAD_PROBE.get(cache_key)
+        if n is None:
+            n = df.rdd.getNumPartitions()
+            _SPREAD_PROBE[cache_key] = n
+    else:
         n = df.rdd.getNumPartitions()
-        _SPREAD_PROBE[cache_key] = n
     if n < par:
         return df.repartition(par, key)
     return df

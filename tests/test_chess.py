@@ -6,9 +6,12 @@ split on a hand-built transposing game pair."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from chess_pos_db_spark.chess import importer, pgn, query
 from chess_pos_db_spark.chess.board import (
@@ -303,6 +306,164 @@ def test_probe_entries_key_pushdown(spark, chess_db):
     )
     assert "PushedFilters" in plan
     assert "In(pos_key" in plan.split("PushedFilters")[1][:300]
+
+
+# The explorer's former grid plan: the probe set as a DataFrame,
+# broadcast-joined against the pruned entries scan and grouped in Spark.
+# Kept here as the reference the driver-side fold must reproduce.
+_REFERENCE_PROBE_SCHEMA = T.StructType(
+    [
+        T.StructField("origin", T.IntegerType(), False),
+        T.StructField("probe_kind", T.StringType(), False),
+        T.StructField("move_san", T.StringType(), True),
+        T.StructField("move_uci", T.StringType(), True),
+        T.StructField("pos_key", T.LongType(), False),
+        T.StructField("expected_rm", T.IntegerType(), True),
+    ]
+)
+
+
+def _reference_response(spark, entries, games, request):
+    probe_rows = query.build_probes(request)
+    probes = spark.createDataFrame(probe_rows, _REFERENCE_PROBE_SCHEMA)
+    keys = sorted({r[4] for r in probe_rows})
+    joined = entries.filter(F.col("pos_key").isin(keys)).join(
+        F.broadcast(probes), "pos_key"
+    )
+    if request.get("levels"):
+        joined = joined.filter(F.col("level").isin(*request["levels"]))
+    if request.get("results"):
+        joined = joined.filter(F.col("result").isin(*request["results"]))
+    select = (
+        F.when(F.col("expected_rm").isNull(), F.lit("all"))
+        .when(F.col("reverse_move") == F.col("expected_rm"), F.lit("continuation"))
+        .otherwise(F.lit("transposition"))
+    )
+    grid_cols = ["origin", "probe_kind", "move_san", "move_uci", "select", "level", "result"]
+    rows = (
+        joined.withColumn("select", select)
+        .groupBy(*grid_cols)
+        .agg(
+            F.sum("cnt").alias("cnt"),
+            F.sum("elo_diff_sum").alias("elo_diff_sum"),
+            F.min("first_game_id").alias("first_game_id"),
+            F.max("last_game_id").alias("last_game_id"),
+        )
+        .collect()
+    )
+    grid = {tuple(r[c] for c in grid_cols): list(r[7:]) for r in rows}
+    headers = {}
+    ids = {g for cell in grid.values() for g in cell[2:] if g is not None}
+    if games is not None and ids:
+        for r in games.filter(F.col("game_id").isin(*ids)).collect():
+            headers[r["game_id"]] = {
+                "white": r["white"],
+                "black": r["black"],
+                "date": r["date_raw"],
+                "event": r["event"],
+                "result": r["result"],
+            }
+    return query.grid_response(request, grid, headers)
+
+
+def _after(*sans):
+    p = Position.from_fen(START_FEN)
+    for san in sans:
+        p = p.make_move(p.parse_san(san))
+    return p.fen()
+
+
+EXPLORER_REQUESTS = {
+    "same_fen_twice": {"positions": [{"fen": START_FEN}, {"fen": START_FEN}]},
+    "child_is_other_root": {
+        "positions": [{"fen": START_FEN}, {"fen": _after("e4")}]
+    },
+    "move_qualified": {
+        "positions": [
+            {"fen": _after("e4", "e5"), "move": "Nf3"},
+            {"fen": _after("Nf3", "Nc6"), "move": "e4"},
+        ]
+    },
+    "levels_results": {
+        "positions": [{"fen": START_FEN}, {"fen": _after("d4")}],
+        "levels": ["human"],
+        "results": ["W", "D"],
+    },
+    "no_children": {
+        "positions": [{"fen": START_FEN}, {"fen": _after("e4", "e5")}],
+        "fetchChildren": False,
+    },
+    "no_entries": {"positions": [{"fen": "4k3/8/8/8/8/8/8/4K3 w - - 0 1"}]},
+}
+
+
+@pytest.mark.parametrize("with_games", [True, False], ids=["games", "no_games"])
+@pytest.mark.parametrize("name", sorted(EXPLORER_REQUESTS))
+def test_explorer_query_matches_broadcast_join_plan(spark, chess_db, name, with_games):
+    """Differential: the pruned scan + driver-side fold answers every
+    request exactly as the broadcast-join + groupBy plan does, including
+    keys shared by several probes (counted once per probe), NULL
+    elo sums, level/result filters and empty positions."""
+    db_dir, _ = chess_db
+    entries = spark.read.parquet(f"{db_dir}/entries")
+    games = spark.read.parquet(f"{db_dir}/games") if with_games else None
+    request = {"token": name, **EXPLORER_REQUESTS[name]}
+    got = query.explorer_query(spark, entries, games, request)
+    assert got == _reference_response(spark, entries, games, request)
+    if name != "no_entries":
+        assert any(node["stats"] for node in got["positions"])
+    else:
+        assert not got["positions"][0]["stats"]
+
+
+def test_fold_grid_sql_aggregate_semantics():
+    """The fold sums cnt, sums elo_diff_sum ignoring NULLs (NULL when
+    every input is NULL), takes min/max game ids ignoring NULLs, and
+    counts a key once per probe that shares it."""
+    probes = [
+        (0, "root", None, None, 7, None),
+        (1, "child", "e4", "e2e4", 7, 5),
+    ]
+    rows = [
+        (7, 5, "human", "W", 2, None, None, 40),
+        (7, 6, "human", "W", 3, 10, 12, None),
+        (7, 5, "human", "B", 1, None, None, None),
+    ]
+    grid = query.fold_grid(rows, probes)
+    assert grid == {
+        (0, "root", None, None, "all", "human", "W"): [5, 10, 12, 40],
+        (0, "root", None, None, "all", "human", "B"): [1, None, None, None],
+        (1, "child", "e4", "e2e4", "continuation", "human", "W"): [2, None, None, 40],
+        (1, "child", "e4", "e2e4", "transposition", "human", "W"): [3, 10, 12, None],
+        (1, "child", "e4", "e2e4", "continuation", "human", "B"): [1, None, None, None],
+    }
+
+
+def _jobs_run_by(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"explorer-job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "explorer job count")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_explorer_query_job_count(spark, chess_db):
+    """One request is one pruned scan (1 Spark job) plus, when games
+    are given, one headers lookup — no probe DataFrame, no broadcast
+    exchange, no grid shuffle."""
+    db_dir, _ = chess_db
+    entries = spark.read.parquet(f"{db_dir}/entries")
+    games = spark.read.parquet(f"{db_dir}/games")
+    request = {"positions": [{"fen": START_FEN}, {"fen": _after("e4")}]}
+    assert _jobs_run_by(
+        spark, lambda: query.explorer_query(spark, entries, None, request)
+    ) == 1
+    assert _jobs_run_by(
+        spark, lambda: query.explorer_query(spark, entries, games, request)
+    ) <= 2
 
 
 def test_merge_databases_equals_single_import(spark, tmp_path):

@@ -432,3 +432,16 @@ def test_split_planning_stats_each_file_once(tmp_path, monkeypatch):
     assert len(rows) == len(files)  # tiny files -> one chunk each
     # metadata integrity: every chunk carries the stat'd size as `end`
     assert [r[6] for r in rows] == sizes
+
+
+def test_split_planning_rejects_short_sizes(tmp_path):
+    """A `sizes` list shorter than `files` is a caller bug: planning must
+    raise, not silently plan no splits for the trailing files."""
+    files = []
+    for i in range(3):
+        p = tmp_path / f"g{i}.pgn"
+        p.write_text(f'[Event "G{i}"]\n[Result "*"]\n\n*\n')
+        files.append((str(p), "human"))
+    sizes = importer.stat_pgn_sizes(files)
+    with pytest.raises(ValueError):
+        importer.plan_pgn_splits(files, 1 << 20, sizes=sizes[:-1])

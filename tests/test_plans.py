@@ -530,6 +530,41 @@ def test_quality_signals_map_only(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
+def test_spread_probe_cache_keys_on_split_confs(spark, tmp_path):
+    """spread_small_scan caches the scan's split count per file set AND
+    per split-sizing confs: changing maxPartitionBytes between two calls
+    on the same files must re-probe, not reuse the first count."""
+    from chess_pos_db_spark.tables import spread_small_scan
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(0, 20_000, 1, 1).selectExpr("id", "id * 7 AS v").write.parquet(path)
+    par = spark.sparkContext.defaultParallelism
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, str(128 << 20))
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() < par
+        assert spread_small_scan(spark, df, "id") is not df
+        spark.conf.set(conf, "4096")
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() >= par
+        assert spread_small_scan(spark, df, "id") is df
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_spread_probe_skips_cache_without_input_files(spark):
+    """Frames with no input files must not share one cached split count."""
+    from chess_pos_db_spark.tables import spread_small_scan
+
+    par = spark.sparkContext.defaultParallelism
+    one = spark.range(0, 10, 1, 1)
+    assert spread_small_scan(spark, one, "id") is not one
+    wide = spark.range(0, 100, 1, par)
+    assert spread_small_scan(spark, wide, "id") is wide
+
+
 def test_salted_agg_two_phase(spark, sf_dir):
     """Skew defense: the salted aggregation must plan BOTH phases as
     hash aggregates over different keys — (key, salt) then (key) — so
