@@ -1249,54 +1249,33 @@ def embedding_lsh_candidates(
     The default b=8 is the fixture pin the registered oracle encodes
     (n=500 → occupancy ≈ 2).
 
-    Signature stage (round-14, guide §4.2): the L·b plane dots per row
-    were interpreted zip_with+aggregate folds (HOFs are not codegen'd)
-    — measured 2.77 s noop at sf0.1. Now ONE float64 (n × d) @ (d ×
-    L·b) numpy matmul per Arrow batch with the bits packed vectorized:
-    0.22 s (12.8×), bucket-for-bucket identical (subtract-checked both
-    ways at sf0.1; tools/ab_emb_lsh.py keeps the losing JVM variant).
-    The round-to-6dp-before-sign guard absorbs fold-order ulp
-    differences between the BLAS sum and the JVM sequential fold —
-    the same discipline that already pins Spark against DuckDB's
-    unordered SUM. Only (vec_id, embedding) crosses the Python
-    boundary (explicit select, §4.1)."""
-    import numpy as np
+    The signature stage is one ``similarity._sign_buckets`` matmul per
+    Arrow batch for all L·b planes (rounding note there); only
+    (vec_id, embedding) crosses the Python boundary."""
+    from .similarity import (
+        _N_PLANES,
+        _embedding_matrix,
+        _plane_matrix,
+        _sign_buckets,
+    )
 
-    from .similarity import _N_PLANES, _plane
-
-    b_planes = n_planes if n_planes is not None else _N_PLANES
-    planes_mat = np.array(
-        [
-            _plane(tbl * b_planes + p)
-            for tbl in range(n_tables)
-            for p in range(b_planes)
-        ],
-        dtype=np.float64,
-    ).T  # (dims, n_tables*b_planes)
+    if n_planes is None:
+        n_planes = _N_PLANES
+    planes = _plane_matrix(range(n_tables), n_planes)
     id_type = dict(emb.dtypes)["vec_id"]
 
     def _sig_batches(batches):
         import numpy as np
         import pyarrow as pa
 
-        n_t, n_p = planes_mat.shape[1] // b_planes, b_planes
-        shifts = np.arange(n_p, dtype=np.int64)
-        tbl_ids = np.arange(n_t, dtype=np.int32)
+        tbl_ids = np.arange(n_tables, dtype=np.int32)
         for batch in batches:
-            arr = batch.column("embedding")
-            n = len(arr)
-            if n == 0:
-                continue
-            flat = np.asarray(arr.flatten(), dtype=np.float64)
-            mat = flat.reshape(n, -1)
-            dots = mat @ planes_mat
-            bits = (np.round(dots, 6) > 0).astype(np.int64)
-            buckets = (bits.reshape(n, n_t, n_p) << shifts).sum(axis=2)
+            mat = _embedding_matrix(batch.column("embedding"), planes.shape[0])
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.repeat(np.asarray(batch.column("vec_id")), n_t)),
-                    pa.array(np.tile(tbl_ids, n)),
-                    pa.array(buckets.reshape(-1)),
+                    pa.array(np.repeat(np.asarray(batch.column("vec_id")), n_tables)),
+                    pa.array(np.tile(tbl_ids, len(mat))),
+                    pa.array(_sign_buckets(mat, planes).reshape(-1)),
                 ],
                 names=["vec_id", "tbl", "bucket"],
             )
@@ -1555,7 +1534,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in-cell, and the strongest similarity. The quantizer is the shared
 # relational one (similarity.py _CELLS_CTE), so the WHOLE pipeline —
 # assignment, pairing, verification, pruning — is oracle-exact.
-# Scale: one mapInPandas assignment scan + one shuffle on cell; at
+# Scale: one mapInArrow assignment scan + one shuffle on cell; at
 # 100 TB the corpus is written partitioned by cell (the IVF-as-layout
 # argument) and each cell's pair verify is an independent task.
 
@@ -1601,7 +1580,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, cnorms = _ivf_centroids(spark, sf_dir)
     # (vec_id, cell) is consumed by BOTH sides of the self-join below;
     # without a lineage cut each branch re-runs the full-corpus
-    # mapInPandas matmul (2 Python stages + 4 corpus scans in the
+    # mapInArrow matmul (2 Python stages + 4 corpus scans in the
     # physical plan). Materialize the 16-byte/row proxy once —
     # triangle_counts' fan-out pattern — so the matmul runs once and
     # each branch joins against the tiny checkpointed table.

@@ -118,9 +118,8 @@ def _plane(plane: int) -> list[float]:
     """Deterministic pseudo-random hyperplane in [-0.5, 0.5)^_DIMS.
 
     Derived driver-side from md5(plane:dim) — no RNG state, identical
-    across executors and runs; shipped as an array literal so the
-    per-row work is one zip_with+aggregate instead of a 64-term
-    expression tree (which bloats codegen).
+    across executors and runs; the oracles embed the same values as a
+    VALUES table.
     """
     import hashlib
 
@@ -131,83 +130,90 @@ def _plane(plane: int) -> list[float]:
     return out
 
 
-def sign_lsh_bucket(
-    vec_col, table: int = 0, n_planes: int | None = None
-) -> "F.Column":
-    """_DIMS-dim embedding → ``n_planes``-bit sign bucket id (BIGINT).
+def _embedding_matrix(arr, dims: int):
+    """One Arrow batch's ``embedding`` list column → (n, dims) float64.
 
-    ``table`` selects an independent hash table (classic multi-table
-    LSH): table ℓ uses hyperplanes ℓ*n_planes .. ℓ*n_planes+n_planes−1,
-    so table 0 is the original single-table bucket and additional
-    tables give OR-amplified recall at linear (in L) candidate cost.
+    The one place an embedding batch becomes a matrix. A NULL row, a
+    row whose length is not ``dims``, or a NULL element raises
+    ``ValueError``: a bare flatten → reshape would silently re-pair
+    rows with the wrong numbers (lengths 65 and 63 still fill a
+    (2, 64) matrix), and a NULL element would become NaN, which the
+    sign test and argmax below turn into bit 0 / cell 0 where the
+    oracle's SUM skips it. ``flatten()`` (not ``.values``) honours a
+    sliced array's offset."""
+    import numpy as np
+    import pyarrow.compute as pc
 
-    ``n_planes`` defaults to the fixture-pinned ``_N_PLANES`` (= 8,
-    what every registered oracle encodes); size it from corpus
-    cardinality with ``lsh_planes_for(n)`` in production — candidate
-    pairs grow ~n²/2^(b+1) per table at fixed b. For table 0 a
-    narrower bucket is always a bit-prefix of a wider one
-    (bucket_b == bucket_b' & (2^b − 1) for b ≤ b'), pinned in
-    tests/test_similarity.py."""
-    if n_planes is None:
-        n_planes = _N_PLANES
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane_arr = F.array(*[F.lit(x) for x in _plane(table * n_planes + p)])
-        # round before the sign: LN/EXP-free but still float — Spark's
-        # sequential fold and DuckDB's unordered SUM can differ in the
-        # last ulp, and an unguarded `> 0` on a near-zero dot would
-        # flip the bucket bit between engines (the same 6dp discipline
-        # the IVF cell assignment applies)
-        dot = F.round(_dot(vec_col, plane_arr), 6)
-        bit = F.when(dot > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bucket = bucket + F.shiftleft(bit, p)
-    return bucket
+    if arr.null_count:
+        raise ValueError(f"embedding: {arr.null_count} NULL row(s) in batch")
+    lengths = pc.list_value_length(arr)
+    bad = pc.filter(lengths, pc.not_equal(lengths, dims))
+    if len(bad):
+        raise ValueError(f"embedding: row of length {bad[0]}, expected {dims}")
+    flat = arr.flatten()
+    if flat.null_count:
+        raise ValueError(f"embedding: {flat.null_count} NULL element(s) in batch")
+    return np.asarray(flat, dtype=np.float64).reshape(len(arr), dims)
+
+
+def _plane_matrix(tables, n_planes: int):
+    """(dims, L, b) hyperplanes of sign-LSH tables ``tables``: table ℓ
+    uses planes ℓ·b .. ℓ·b+b−1, so table 0 at b bits is a bit-prefix of
+    table 0 at any wider b (pinned in tests/test_similarity.py)."""
+    import numpy as np
+
+    return np.array(
+        [[_plane(tbl * n_planes + p) for p in range(n_planes)] for tbl in tables],
+        dtype=np.float64,
+    ).transpose(2, 0, 1)
+
+
+def _sign_buckets(mat, planes):
+    """(n, dims) matrix × (dims, L, b) planes → (n, L) int64 buckets:
+    one matmul, bit p of table ℓ set when its plane dot is > 0.
+
+    The dot is rounded to 6 dp before the sign test, as the oracles'
+    ``ROUND(dot, 6) > 0`` does, so a last-ulp difference between the
+    BLAS sum and DuckDB's unordered SUM cannot flip a bit near zero.
+    ``np.round`` rounds half-to-even while Spark and DuckDB ``ROUND``
+    round half-up, so a dot landing exactly on a 6-dp halfway point
+    could still flip one bit against the oracle; that is measure-zero
+    and was never observed at sf0.01 or sf0.1."""
+    import numpy as np
+
+    dims, n_tables, n_planes = planes.shape
+    dots = mat @ planes.reshape(dims, -1)
+    bits = (np.round(dots, 6) > 0).astype(np.int64)
+    bits = bits.reshape(len(mat), n_tables, n_planes)
+    return (bits << np.arange(n_planes, dtype=np.int64)).sum(axis=2)
 
 
 def sign_lsh_bucketed(emb, table: int = 0, n_planes: int | None = None):
-    """(vec_id, embedding, bucket): the single-table sign-LSH bucket
-    assignment as ONE batched numpy matmul per Arrow batch (guide §4.2).
+    """(vec_id, embedding, bucket): the ``n_planes``-bit sign bucket of
+    every vector in hash table ``table``, one ``_sign_buckets`` matmul
+    per Arrow batch (rounding note there).
 
-    Bucket-for-bucket identical to ``sign_lsh_bucket`` (the per-plane
-    JVM expression, kept above for the oracle-CTE derivation and the
-    bit-prefix pin): the round-to-6dp-before-sign guard absorbs
-    fold-order ulp differences between the BLAS sum and the JVM
-    sequential fold — the same discipline that pins Spark against
-    DuckDB's unordered SUM. Why: b interpreted zip_with+aggregate
-    folds per row (HOFs are not codegen'd) dominated the ANN-family
-    signature stages (measured at sf0.1: dedup_embedding_ann
-    1.66 → 0.57 s, see OPTIMIZATION_r14.md §12). Only
+    ``n_planes`` defaults to the fixture-pinned ``_N_PLANES`` (= 8,
+    what every registered oracle encodes); size it from corpus
+    cardinality with ``lsh_planes_for(n)`` in production. Only
     (vec_id, embedding) crosses the boundary; embedding is passed
     through untouched so verifiers keep using it JVM-side."""
-    import numpy as np
-
     if n_planes is None:
         n_planes = _N_PLANES
-    planes_mat = np.array(
-        [_plane(table * n_planes + p) for p in range(n_planes)],
-        dtype=np.float64,
-    ).T  # (dims, n_planes)
+    planes = _plane_matrix([table], n_planes)
     fields = dict(emb.dtypes)
 
     def _bucket_batches(batches):
-        import numpy as np
         import pyarrow as pa
 
-        shifts = np.arange(planes_mat.shape[1], dtype=np.int64)
         for batch in batches:
             arr = batch.column("embedding")
-            n = len(arr)
-            if n == 0:
-                continue
-            flat = np.asarray(arr.flatten(), dtype=np.float64)
-            dots = flat.reshape(n, -1) @ planes_mat
-            bits = (np.round(dots, 6) > 0).astype(np.int64)
-            buckets = (bits << shifts).sum(axis=1)
+            mat = _embedding_matrix(arr, planes.shape[0])
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("vec_id"),
-                    batch.column("embedding"),
-                    pa.array(buckets),
+                    arr,
+                    pa.array(_sign_buckets(mat, planes)[:, 0]),
                 ],
                 names=["vec_id", "embedding", "bucket"],
             )
@@ -413,22 +419,26 @@ def _cell_assignments(emb: DataFrame, centroids, cnorms) -> DataFrame:
     matmul per Arrow batch. Assignment score = ROUND(raw_dot /
     centroid_norm, 6) — the oracle's exact formula; rounding BEFORE the
     argmax keeps a last-ulp summation-order difference from flipping a
-    cell. First index wins ties (= ORDER BY score DESC, c_idx)."""
-    import pandas as pd
+    cell (half-even caveat at ``_sign_buckets``). First index wins ties
+    (= ORDER BY score DESC, c_idx)."""
 
     def assign(batches):
         import numpy as np
+        import pyarrow as pa
 
-        for pdf in batches:
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
+        for batch in batches:
+            v = _embedding_matrix(batch.column("embedding"), centroids.shape[1])
             scores = np.round((v @ centroids.T) / cnorms, 6)
-            cells = np.argmax(scores, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": cells.astype("int64")}
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("vec_id").cast(pa.int64()),
+                    pa.array(np.argmax(scores, axis=1).astype(np.int64)),
+                ],
+                names=["vec_id", "cell"],
             )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id long, cell long"
+    return emb.select("vec_id", "embedding").mapInArrow(
+        assign, "vec_id long, cell long"
     )
 
 
@@ -453,7 +463,7 @@ def _ivf_query(
     (cell), search only the query's top-``nprobe`` cells.
 
     Scale path: cell assignment is one vectorized numpy matmul per Arrow
-    batch (mapInPandas); the corpus would be written partitioned by
+    batch (mapInArrow); the corpus would be written partitioned by
     ``cell`` so a query scans only nprobe/K of the data (partition
     pruning — the IVF index realized as Parquet layout). The in-cell
     scan is the same brute-force cosine as ``similarity_topk``.
@@ -1179,16 +1189,14 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
 def pq_encode(emb: DataFrame, books) -> DataFrame:
     """(vec_id, codes array<int>) — map-only Arrow-batched encoding of
     L2-normalized vectors to per-subspace nearest codewords."""
-    import numpy as np
-    import pandas as pd
-
     m_sub, _, d_sub = books.shape
 
     def enc(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            x = _embedding_matrix(batch.column("embedding"), m_sub * d_sub)
             n = np.linalg.norm(x, axis=1, keepdims=True)
             x = x / np.where(n == 0, 1.0, n)
             codes = np.zeros((len(x), m_sub), dtype=np.int32)
@@ -1196,11 +1204,16 @@ def pq_encode(emb: DataFrame, books) -> DataFrame:
                 xs = x[:, m * d_sub : (m + 1) * d_sub]
                 d2 = ((xs[:, None, :] - books[m][None, :, :]) ** 2).sum(-1)
                 codes[:, m] = d2.argmin(1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "codes": list(codes)}
+            offsets = np.arange(0, codes.size + 1, m_sub, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("vec_id").cast(pa.int64()),
+                    pa.ListArray.from_arrays(offsets, pa.array(codes.ravel())),
+                ],
+                names=["vec_id", "codes"],
             )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
+    return emb.select("vec_id", "embedding").mapInArrow(
         enc, "vec_id long, codes array<int>"
     )
 

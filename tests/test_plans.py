@@ -481,10 +481,11 @@ def test_paragraph_dedup_no_doc_cross_join(spark, sf_dir):
 def test_pq_scan_is_takeordered_no_udf_scoring(spark, sf_dir):
     """N3pq: the ADC candidate scan ends in TakeOrderedAndProject and
     the scoring stage is JVM expressions — the only Python stage is the
-    Arrow encoder (one ArrowEvalPython/MapInPandas, not per-score)."""
+    Arrow encoder (one MapInArrow, not per-score)."""
     plan = _plan(q("similarity_ivf_pq", spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("MapInPandas") == 0
 
 
 def test_ewma_single_window_node(spark, sf_dir):

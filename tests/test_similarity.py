@@ -207,10 +207,13 @@ def test_sign_lsh_narrow_bucket_is_prefix_of_wide(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     b = 5
-    rows = emb.select(
-        sim.sign_lsh_bucket(F.col("embedding"), 0, n_planes=b).alias("narrow"),
-        sim.sign_lsh_bucket(F.col("embedding")).alias("wide"),
-    ).collect()
+    narrow = sim.sign_lsh_bucketed(emb, 0, n_planes=b).select(
+        "vec_id", F.col("bucket").alias("narrow")
+    )
+    wide = sim.sign_lsh_bucketed(emb).select(
+        "vec_id", F.col("bucket").alias("wide")
+    )
+    rows = narrow.join(wide, "vec_id").collect()
     assert rows
     for r in rows:
         assert r.narrow == (r.wide & (2**b - 1))
@@ -574,3 +577,124 @@ def test_ivf_layout_delete_empties_a_cell(spark, tmp_path):
     survivors = spark.read.parquet(out)
     assert survivors.filter(F.col("cell") == target).count() == 0
     assert survivors.count() == 20 - victims.count()
+
+
+# --- malformed embeddings: every batch goes through one guarded decoder -----
+
+_EMB_SCHEMA = "vec_id long, embedding array<float>"
+_EMB_STAGES = (
+    "sign_lsh_bucketed",
+    "embedding_lsh_candidates",
+    "cell_assignments",
+    "pq_encode",
+)
+
+
+def _control_rows():
+    """Four well-formed 64-dim rows; rows 2 and 3 are near-copies of 0
+    and 1 so the LSH candidate stage has pairs to report."""
+    rng = np.random.RandomState(3)
+    base = rng.standard_normal((2, sim._DIMS))
+    vecs = np.vstack([base, base + 1e-3 * rng.standard_normal((2, sim._DIMS))])
+    return [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+
+
+def _malformed_rows(case):
+    rows = _control_rows()
+    if case == "null_row":
+        rows[1] = (1, None)
+        return rows, "NULL row"
+    if case == "ragged_65_63":
+        # 65 + 63 values still fill two 64-wide rows of a flat reshape
+        rows[1] = (1, rows[1][1] + [0.5])
+        rows[2] = (2, rows[2][1][:-1])
+        return rows, "row of length 65, expected 64"
+    rows[2][1][7] = None  # null_element
+    return rows, "NULL element"
+
+
+def _stage_inputs():
+    rng = np.random.RandomState(5)
+    c = rng.standard_normal((3, sim._DIMS))
+    books = rng.standard_normal((sim._PQ_M, sim._PQ_K, sim._DIMS // sim._PQ_M))
+    return c, np.linalg.norm(c, axis=1), books
+
+
+def _run_stage(stage, emb):
+    from chess_pos_db_spark.llm.dedup import embedding_lsh_candidates
+
+    c, cn, books = _stage_inputs()
+    if stage == "sign_lsh_bucketed":
+        df = sim.sign_lsh_bucketed(emb).select("vec_id", "bucket")
+    elif stage == "embedding_lsh_candidates":
+        df = embedding_lsh_candidates(emb)
+    elif stage == "cell_assignments":
+        df = sim._cell_assignments(emb, c, cn)
+    else:
+        df = sim.pq_encode(emb, books)
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _row_reference(stage, rows):
+    """Per-row numpy answer of each stage (no batching, no decoder)."""
+    c, cn, books = _stage_inputs()
+    vecs = {i: np.array(v, dtype=np.float32).astype(np.float64) for i, v in rows}
+
+    def bucket(v, tbl):
+        b = sim._N_PLANES
+        return sum(
+            int(round(float(v @ np.array(sim._plane(tbl * b + p))), 6) > 0) << p
+            for p in range(b)
+        )
+
+    if stage == "sign_lsh_bucketed":
+        return [(i, bucket(v, 0)) for i, v in vecs.items()]
+    if stage == "embedding_lsh_candidates":
+        from chess_pos_db_spark.llm.dedup import _EMB_LSH_TABLES
+
+        return [
+            (a, b)
+            for a in vecs
+            for b in vecs
+            if a < b
+            and any(
+                bucket(vecs[a], tbl) == bucket(vecs[b], tbl)
+                for tbl in range(_EMB_LSH_TABLES)
+            )
+        ]
+    if stage == "cell_assignments":
+        return [
+            (i, int(np.argmax(np.round((c @ v) / cn, 6)))) for i, v in vecs.items()
+        ]
+    d_sub = books.shape[2]
+    out = []
+    for i, v in vecs.items():
+        x = v / np.linalg.norm(v)
+        out.append((i, [
+            int(((x[m * d_sub:(m + 1) * d_sub] - books[m]) ** 2).sum(-1).argmin())
+            for m in range(sim._PQ_M)
+        ]))
+    return out
+
+
+@pytest.mark.parametrize("case", ["null_row", "ragged_65_63", "null_element"])
+@pytest.mark.parametrize("stage", _EMB_STAGES)
+def test_malformed_embedding_raises_named_error(spark, stage, case):
+    """A NULL row, a 65/63 ragged pair that flattens to a valid 4×64
+    matrix, or a NULL element must fail with the decoder's message —
+    never bucket, assign or encode rows with the wrong numbers. One
+    partition keeps all four rows in one Arrow batch."""
+    rows, msg = _malformed_rows(case)
+    emb = spark.createDataFrame(rows, _EMB_SCHEMA).coalesce(1)
+    with pytest.raises(Exception, match=f"embedding: .*{msg}"):
+        _run_stage(stage, emb)
+
+
+@pytest.mark.parametrize("stage", _EMB_STAGES)
+def test_wellformed_embedding_control(spark, stage):
+    rows = _control_rows()
+    emb = spark.createDataFrame(rows, _EMB_SCHEMA).coalesce(1)
+    got = _run_stage(stage, emb)
+    assert got == sorted(_row_reference(stage, rows))
+    if stage == "embedding_lsh_candidates":
+        assert got  # the near-copies collide
